@@ -73,7 +73,7 @@ _BUCKET_N = 32
 #: staged-layout parquet codec. lz4, not zstd (r10 A/B at the 1000x cell):
 #: scans dominate constructed-mode cost, and Spark's zstd decode of the
 #: 60 M-row 5-column lineitem pass ran 0.53 s warm / 2.6 s cold vs lz4's
-#: 0.44 s / 0.74 s (tools/q9_ab2.py session; snappy between). Disk cost is
+#: 0.44 s / 0.74 s (A/B in commit 93a8f5e; snappy between). Disk cost is
 #: +22% on a local /tmp layout nobody ships. A cluster ingest would weigh
 #: network/storage economics differently — the constant is the knob.
 _LAYOUT_CODEC = "lz4"
@@ -453,22 +453,6 @@ def values_df(spark: SparkSession, rows: list[tuple], ddl: str) -> "DataFrame":
     return spark.sql(
         f"SELECT {cols} FROM (VALUES {body}) AS t({names}){tail}"
     )
-
-
-def shared_ansi(spark: SparkSession, sf_dir: str, name: str) -> "DataFrame":
-    """Run ``name``'s registered oracle SQL through Spark itself.
-
-    For operators whose surface is pure ANSI SQL, the SAME text is executed
-    by both engines — Spark parses/plans it via Catalyst here, DuckDB runs
-    it as the oracle — which is the strongest possible parity statement
-    (hash-identical results from the identical query text) AND single-parse
-    construction. Substitution is gated per query: only bodies whose
-    oracle-text plan has IDENTICAL physical join/exchange features to the
-    former Column tree at sf0.1 were switched (r7; queries whose DataFrame
-    form encodes a better plan — extra broadcasts, merge pins — keep it)."""
-    from duckdb_fastlanes_spark import registry
-
-    return sql_q(spark, sf_dir, registry.oracles()[name])
 
 
 def install_stats(

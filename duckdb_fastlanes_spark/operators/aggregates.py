@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 
 @register(
@@ -93,12 +93,13 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (status, priority) — all 4 grouping sets.
 
-    r9: left the shared_ansi set — Spark's native CUBE emits NO grand-total
-    row over empty input where ANSI/DuckDB emit one, so the Spark side is now
-    a pre-aggregate CTE + the three grouped grouping-sets + a plain
-    global-aggregate leg (one row on empty input in both engines). avg is
-    decomposed as sum/count over the pre-aggregate so every leg reads the
-    tiny (status, priority) group frame; orders is scanned once."""
+    r9: the Spark body is no longer the oracle text — Spark's native CUBE
+    emits NO grand-total row over empty input where ANSI/DuckDB emit one,
+    so the Spark side is now a pre-aggregate CTE + the three grouped
+    grouping-sets + a plain global-aggregate leg (one row on empty input in
+    both engines). avg is decomposed as sum/count over the pre-aggregate so
+    every leg reads the tiny (status, priority) group frame; orders is
+    scanned once."""
     from duckdb_fastlanes_spark.catalog import sql_q
     from duckdb_fastlanes_spark.functions.ordering import ordered_small
 
@@ -159,9 +160,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# FILTER (WHERE ...) conditional aggregation — Spark supports the same
+# syntax via expr(); stays in whole-stage codegen.
+register_ansi(
     "agg_filtered",
-    oracle="""
+    """
     SELECT
         l_returnflag,
         count(*) FILTER (WHERE l_quantity > 25)                 AS n_bulk,
@@ -172,14 +175,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag
     """,
 )
-def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTER (WHERE ...) conditional aggregation — Spark supports the same
-    syntax via expr(); stays in whole-stage codegen."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "agg_filtered")
 
 
 @register(
@@ -239,9 +234,11 @@ def agg_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Statistical aggregates (stddev/variance/corr/median) — DuckDB ordered-set
+# family (SURVEY §2.C); Spark has native equivalents (median since 3.4).
+register_ansi(
     "agg_stats",
-    oracle="""
+    """
     SELECT
         l_returnflag,
         round(stddev_samp(l_extendedprice), 2) AS sd_price,
@@ -253,14 +250,6 @@ def agg_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag
     """,
 )
-def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates (stddev/variance/corr/median) — DuckDB ordered-set
-    family (SURVEY §2.C); Spark has native equivalents (median since 3.4)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "agg_stats")
 
 
 @register(

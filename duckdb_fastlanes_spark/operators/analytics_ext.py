@@ -9,12 +9,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 
-@register(
+# Z-score outlier detection: per-type mean/stddev (one aggregate, tiny
+# result, broadcast back) then a filter on the full stream — two passes,
+# no window sort. At 100 TB the stats side is per-partition-combinable
+# and the probe is a pure scan.
+register_ansi(
     "events_anomaly_zscore",
-    oracle="""
+    """
     WITH stats AS (
         SELECT event_type, avg(value) AS mu, stddev_pop(value) AS sigma
         FROM events GROUP BY event_type
@@ -26,18 +30,6 @@ from duckdb_fastlanes_spark.registry import register
     ORDER BY e.event_id
     """,
 )
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-score outlier detection: per-type mean/stddev (one aggregate, tiny
-    result, broadcast back) then a filter on the full stream — two passes,
-    no window sort. At 100 TB the stats side is per-partition-combinable
-    and the probe is a pure scan."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "events_anomaly_zscore")
 
 
 @register(
@@ -240,9 +232,16 @@ def customers_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Pareto analysis: cumulative revenue share per supplier (the 80/20
+# read-off). Running sum over the revenue-ranked rollup ÷ grand total —
+# both windows run over supplier cardinality, not lineitem. Per-supplier
+# revenue aggregates exact integer micro-units (the _usum_col split-BIGINT
+# pattern): a raw double sum rounded the cent differently per engine at
+# the 100x cell, which also flipped the tied-revenue ranking; the rounded
+# revenues then make the prefix-sum share order-identical.
+register_ansi(
     "supplier_pareto",
-    oracle="""
+    """
     WITH rev AS (
         SELECT l_suppkey,
                round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount))
@@ -258,21 +257,6 @@ def customers_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_suppkey
     """,
 )
-def supplier_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto analysis: cumulative revenue share per supplier (the 80/20
-    read-off). Running sum over the revenue-ranked rollup ÷ grand total —
-    both windows run over supplier cardinality, not lineitem. Per-supplier
-    revenue aggregates exact integer micro-units (the _usum_col split-BIGINT
-    pattern): a raw double sum rounded the cent differently per engine at
-    the 100x cell, which also flipped the tied-revenue ranking; the rounded
-    revenues then make the prefix-sum share order-identical."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "supplier_pareto")
 
 
 @register(
@@ -402,9 +386,15 @@ def chi2_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# 7-day rolling distinct active users (the DAU/WAU board metric). Distinct
+# windowed counts don't compose, so the oracle's range join is re-expressed
+# scalably: collapse to distinct (user, day) first, then EXPLODE each
+# activity day into the ≤7 rolling windows it feeds and equi-aggregate on
+# window day — shuffle keys are dense days, never a theta join, and the
+# fan-out is bounded ×7 of the already-collapsed activity set.
+register_ansi(
     "events_rolling_distinct_users",
-    oracle="""
+    """
     WITH activity AS (
         SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
         FROM events
@@ -419,25 +409,15 @@ def chi2_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.day
     """,
 )
-def events_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day rolling distinct active users (the DAU/WAU board metric). Distinct
-    windowed counts don't compose, so the oracle's range join is re-expressed
-    scalably: collapse to distinct (user, day) first, then EXPLODE each
-    activity day into the ≤7 rolling windows it feeds and equi-aggregate on
-    window day — shuffle keys are dense days, never a theta join, and the
-    fan-out is bounded ×7 of the already-collapsed activity set."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "events_rolling_distinct_users")
 
 
-@register(
+# Shannon entropy of the type distribution within each brand — the
+# concentration/diversity probe (0 = single-type brand, ln(k) = uniform
+# over k types). Two cheap aggregates over the (brand, type) cells; the
+# raw table is scanned once.
+register_ansi(
     "entropy_by_group",
-    oracle="""
+    """
     WITH c AS (
         SELECT p_brand, p_type, count(*) AS cnt
         FROM part GROUP BY 1, 2
@@ -452,23 +432,22 @@ def events_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY c.p_brand
     """,
 )
-def entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of the type distribution within each brand — the
-    concentration/diversity probe (0 = single-type brand, ln(k) = uniform
-    over k types). Two cheap aggregates over the (brand, type) cells; the
-    raw table is scanned once."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "entropy_by_group")
 
 
-@register(
+# Kolmogorov–Smirnov two-sample statistic between even- and odd-keyed
+# order prices: max |ECDF0(v) - ECDF1(v)| — the distribution-drift test a
+# pipeline runs between data snapshots or train/eval splits (compare
+# dq_split_divergence's KL/TVD on token histograms; KS works on raw
+# numerics with no binning). Running counts per group over one global
+# value order give both ECDFs in a single window pass. Ties: evaluating
+# at ROWS-cumulative counts is exact at each value's last duplicate, and
+# the max over rows equals the max over distinct values. Scale note: the
+# global-order window is the exact-semantics variant; at 100 TB the same
+# decision comes from a quantile-sketch ECDF on approx_percentile
+# boundaries.
+register_ansi(
     "stats_ks_two_sample",
-    oracle="""
+    """
     WITH s AS (
         SELECT o_totalprice AS v, o_orderkey % 2 AS grp FROM orders
     ),
@@ -491,25 +470,6 @@ def entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ecdf, n
     """,
 )
-def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kolmogorov–Smirnov two-sample statistic between even- and odd-keyed
-    order prices: max |ECDF0(v) - ECDF1(v)| — the distribution-drift test a
-    pipeline runs between data snapshots or train/eval splits (compare
-    dq_split_divergence's KL/TVD on token histograms; KS works on raw
-    numerics with no binning). Running counts per group over one global
-    value order give both ECDFs in a single window pass. Ties: evaluating
-    at ROWS-cumulative counts is exact at each value's last duplicate, and
-    the max over rows equals the max over distinct values. Scale note: the
-    global-order window is the exact-semantics variant; at 100 TB the same
-    decision comes from a quantile-sketch ECDF on approx_percentile
-    boundaries."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "stats_ks_two_sample")
 
 
 @register(

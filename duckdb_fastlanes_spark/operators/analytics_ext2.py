@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 #: winnowing parameters (Schleimer, Wilkerson, Aiken, SIGMOD 2003 — the MOSS
 #: local fingerprinting algorithm): k-gram size in WORDS and window width.
@@ -117,9 +117,19 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Benford's-law first-digit audit over order totals — the classic
+# fraud/data-quality screen: natural multiplicative amounts follow
+# P(d) = log10(1+1/d), and a synthetic or truncated column does not.
+# Emits per-digit observed vs expected shares plus the chi-square
+# contribution (sum it for the test statistic).
+#
+# Scale shape: one scan → 9-group aggregate (map-side combined), one
+# scalar total joined back by broadcast. The first significant digit is
+# pure float arithmetic (floor(x/10^floor(log10 x))) — identical IEEE
+# both engines, no string formatting (engine-dependent) anywhere.
+register_ansi(
     "dq_benford_digits",
-    oracle="""
+    """
     WITH pos AS (SELECT o_totalprice AS x FROM orders WHERE o_totalprice > 0),
     dg AS (SELECT CAST(floor(x / power(10, floor(log10(x)))) AS INTEGER) AS digit
            FROM pos),
@@ -135,21 +145,6 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY digit
     """,
 )
-def dq_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit over order totals — the classic
-    fraud/data-quality screen: natural multiplicative amounts follow
-    P(d) = log10(1+1/d), and a synthetic or truncated column does not.
-    Emits per-digit observed vs expected shares plus the chi-square
-    contribution (sum it for the test statistic).
-
-    Scale shape: one scan → 9-group aggregate (map-side combined), one
-    scalar total joined back by broadcast. The first significant digit is
-    pure float arithmetic (floor(x/10^floor(log10 x))) — identical IEEE
-    both engines, no string formatting (engine-dependent) anywhere."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # the oracle text is dialect-portable ANSI — one parse, both engines
-    return shared_ansi(spark, sf_dir, "dq_benford_digits")
 
 
 def _kcore_oracle() -> str:
@@ -399,9 +394,19 @@ def events_did_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Cohort lifetime-value curve: customers cohorted by first-order month,
+# revenue accumulated by cohort age (months since first order), reported
+# as cumulative LTV per cohort member — the standard retention-economics
+# rollup a growth pipeline feeds from the orders fact.
+#
+# Scale shape: first-order month is one key-local aggregate on customer;
+# the revenue join probes it on the same key (co-partitioned after one
+# shuffle); the cumulative window runs over the tiny (cohort, age) grid,
+# never the fact table. Money in exact integer cents end-to-end — the
+# float division happens once, on an exact integer, after the window.
+register_ansi(
     "orders_cohort_ltv",
-    oracle="""
+    """
     WITH first_o AS (
         SELECT o_custkey AS cust,
                min(year(o_orderdate) * 12 + month(o_orderdate)) AS cm
@@ -430,25 +435,21 @@ def events_did_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cohort_month, age
     """,
 )
-def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value curve: customers cohorted by first-order month,
-    revenue accumulated by cohort age (months since first order), reported
-    as cumulative LTV per cohort member — the standard retention-economics
-    rollup a growth pipeline feeds from the orders fact.
-
-    Scale shape: first-order month is one key-local aggregate on customer;
-    the revenue join probes it on the same key (co-partitioned after one
-    shuffle); the cumulative window runs over the tiny (cohort, age) grid,
-    never the fact table. Money in exact integer cents end-to-end — the
-    float division happens once, on an exact integer, after the window."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    return shared_ansi(spark, sf_dir, "orders_cohort_ltv")
 
 
-@register(
+# Local-peak detection over the hourly event-rate series: an hour is a
+# peak when its count strictly exceeds both observed neighbors and a
+# noise floor (n ≥ 5) — the alerting primitive behind burst/incident
+# detection on a metrics rollup. Exact integer counts end-to-end; the
+# neighbor comparison is lag/lead over the (type, hour) series, so a
+# boundary hour (no neighbor) can still qualify via the -1 sentinel.
+#
+# Scale shape: the rollup shrinks the feed to hours×types before any
+# window; the lag/lead window runs on that rollup partitioned by type.
+# At 100 TB the scan is the only full-data pass.
+register_ansi(
     "events_peak_detection",
-    oracle="""
+    """
     WITH hourly AS (
         SELECT event_type, date_trunc('hour', ts) AS h, count(*) AS n
         FROM events GROUP BY event_type, date_trunc('hour', ts)
@@ -466,20 +467,6 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, hour_start
     """,
 )
-def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local-peak detection over the hourly event-rate series: an hour is a
-    peak when its count strictly exceeds both observed neighbors and a
-    noise floor (n ≥ 5) — the alerting primitive behind burst/incident
-    detection on a metrics rollup. Exact integer counts end-to-end; the
-    neighbor comparison is lag/lead over the (type, hour) series, so a
-    boundary hour (no neighbor) can still qualify via the -1 sentinel.
-
-    Scale shape: the rollup shrinks the feed to hours×types before any
-    window; the lag/lead window runs on that rollup partitioned by type.
-    At 100 TB the scan is the only full-data pass."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    return shared_ansi(spark, sf_dir, "events_peak_detection")
 
 
 @register(
@@ -631,23 +618,19 @@ _CMS_SQL = f"""
 """
 
 
-@register("sketch_count_min_heavy_hitters", oracle=_CMS_SQL)
-def sketch_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch heavy-hitter audit (Cormode & Muthukrishnan 2005):
-    build a {CMS_D}×{CMS_W} CMS over per-user event counts with an integer
-    pairwise-independent hash family, then probe the exact top-10 users and
-    report estimate vs truth. The overestimate column is the CMS guarantee
-    made visible: est ≥ exact always, with excess = colliding mass.
-
-    Scale shape: the sketch is {CMS_D}×{CMS_W} counters built by one
-    map-side-combinable aggregate — the MERGEABLE-summary shape that makes
-    frequency monitoring free at 100 TB (each partition sketches locally,
-    merges by cell addition); the probe joins a LIMIT-bounded candidate
-    set against the tiny sketch. Pure integer arithmetic end-to-end, so
-    the hash (and the result) is engine- and layout-invariant."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    return shared_ansi(spark, sf_dir, "sketch_count_min_heavy_hitters")
+# Count-Min sketch heavy-hitter audit (Cormode & Muthukrishnan 2005):
+# build a {CMS_D}×{CMS_W} CMS over per-user event counts with an integer
+# pairwise-independent hash family, then probe the exact top-10 users and
+# report estimate vs truth. The overestimate column is the CMS guarantee
+# made visible: est ≥ exact always, with excess = colliding mass.
+#
+# Scale shape: the sketch is {CMS_D}×{CMS_W} counters built by one
+# map-side-combinable aggregate — the MERGEABLE-summary shape that makes
+# frequency monitoring free at 100 TB (each partition sketches locally,
+# merges by cell addition); the probe joins a LIMIT-bounded candidate
+# set against the tiny sketch. Pure integer arithmetic end-to-end, so
+# the hash (and the result) is engine- and layout-invariant.
+register_ansi("sketch_count_min_heavy_hitters", _CMS_SQL)
 
 
 #: RFM segmentation: k clusters over 3 z-scored features, fixed Lloyd rounds
@@ -908,9 +891,19 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Sample-ratio-mismatch (SRM) check for the A/B split used by
+# events_did_uplift: with an intended 50/50 user split, the 1-dof
+# chi-square over per-arm DISTINCT user counts is (n_a−n_b)²/(n_a+n_b);
+# crossing 3.841 (p < 0.05) flags a broken randomizer — the first gate
+# any experimentation pipeline runs before reading treatment effects.
+#
+# Scale shape: one DISTINCT-user aggregate (map-side partial on
+# user_id), then scalar arithmetic on two counts. The division is
+# guarded so an empty feed yields the NULL-verdict row identically in
+# both engines (Spark returns NULL on x/0 where DuckDB returns inf).
+register_ansi(
     "events_ab_srm_check",
-    oracle="""
+    """
     WITH arms AS (
         SELECT user_id % 2 = 0 AS arm_a, user_id
         FROM events GROUP BY user_id
@@ -930,20 +923,6 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM counts
     """,
 )
-def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch (SRM) check for the A/B split used by
-    events_did_uplift: with an intended 50/50 user split, the 1-dof
-    chi-square over per-arm DISTINCT user counts is (n_a−n_b)²/(n_a+n_b);
-    crossing 3.841 (p < 0.05) flags a broken randomizer — the first gate
-    any experimentation pipeline runs before reading treatment effects.
-
-    Scale shape: one DISTINCT-user aggregate (map-side partial on
-    user_id), then scalar arithmetic on two counts. The division is
-    guarded so an empty feed yields the NULL-verdict row identically in
-    both engines (Spark returns NULL on x/0 where DuckDB returns inf)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    return shared_ansi(spark, sf_dir, "events_ab_srm_check")
 
 
 #: HyperLogLog geometry: m = 64 registers (6-bit bucket index), 26-bit

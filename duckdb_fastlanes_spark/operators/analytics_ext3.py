@@ -18,7 +18,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 #: nDCG evaluation geometry: queries = vec_id < NDCG_QUERIES, candidate pool
 #: = the next NDCG_POOL vectors (bounded cross join — the documented audit
@@ -286,22 +286,17 @@ ORDER BY expectation
 """
 
 
-@register("dq_expectations_gate", oracle=_DQ_SQL)
-def dq_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality expectations gate (the Great-Expectations shape a
-    training-data pipeline runs before every ingest): range, null, and
-    referential-integrity checks rolled up to one row per expectation with
-    violation counts and a pass flag.
-
-    Scale shape: ONE scan of lineitem computes all three of its conditional
-    counts (FILTER aggregates — map-side combinable), one scan of orders,
-    and the FK check is a distinct-key left join (keys only, both sides
-    pre-shrunk by DISTINCT before the join). The SAME ANSI text runs on
-    both engines. Empty catalog: all counts 0, every expectation passes —
-    five rows, both engines."""
-    from duckdb_fastlanes_spark.catalog import sql_q
-
-    return sql_q(spark, sf_dir, _DQ_SQL)
+# Data-quality expectations gate (the Great-Expectations shape a
+# training-data pipeline runs before every ingest): range, null, and
+# referential-integrity checks rolled up to one row per expectation with
+# violation counts and a pass flag.
+#
+# Scale shape: ONE scan of lineitem computes all three of its conditional
+# counts (FILTER aggregates — map-side combinable), one scan of orders,
+# and the FK check is a distinct-key left join (keys only, both sides
+# pre-shrunk by DISTINCT before the join). Empty catalog: all counts 0,
+# every expectation passes — five rows, both engines.
+register_ansi("dq_expectations_gate", _DQ_SQL)
 
 
 def _hll_group_sql(dialect: str) -> str:

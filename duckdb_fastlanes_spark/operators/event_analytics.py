@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 #: time slices for the distributed sweep-line prefix sum (events_max_
 #: concurrency): parallelism = |event_type| × this; the offset frame stays
@@ -22,9 +22,12 @@ from duckdb_fastlanes_spark.registry import register
 N_SWEEP_BUCKETS = 64
 
 
-@register(
+# Ordered funnel view → click → purchase: per-user first-touch times via
+# conditional min (one shuffle), then counting users whose stages happened
+# in order. FILTER(WHERE) is the §2.C filtered-aggregate surface.
+register_ansi(
     "events_funnel",
-    oracle="""
+    """
     WITH per_user AS (
         SELECT user_id,
                min(CASE WHEN event_type = 'view' THEN ts END)     AS first_view,
@@ -43,17 +46,6 @@ N_SWEEP_BUCKETS = 64
     FROM per_user
     """,
 )
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel view → click → purchase: per-user first-touch times via
-    conditional min (one shuffle), then counting users whose stages happened
-    in order. FILTER(WHERE) is the §2.C filtered-aggregate surface."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "events_funnel")
 
 
 @register(
@@ -554,9 +546,15 @@ def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Robust outlier gate: median absolute deviation per event type with the
+# 1.4826 normal-consistency constant (the robust twin of
+# events_anomaly_zscore — immune to the very outliers it hunts). Three
+# passes over the stream, but each reduces to a per-type scalar that
+# broadcasts back; no window, no global sort. Exact medians keep the
+# oracle hashable; at 100 TB swap in percentile_approx and drop a pass.
+register_ansi(
     "events_mad_outliers",
-    oracle="""
+    """
     WITH med AS (
         SELECT event_type, median(value) AS med
         FROM events GROUP BY event_type
@@ -578,20 +576,6 @@ def events_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY e.event_type
     """,
 )
-def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier gate: median absolute deviation per event type with the
-    1.4826 normal-consistency constant (the robust twin of
-    events_anomaly_zscore — immune to the very outliers it hunts). Three
-    passes over the stream, but each reduces to a per-type scalar that
-    broadcasts back; no window, no global sort. Exact medians keep the
-    oracle hashable; at 100 TB swap in percentile_approx and drop a pass."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "events_mad_outliers")
 
 
 @register(

@@ -625,11 +625,11 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # domain from parquet footer statistics (driver-only, no job): beyond
     # 2³¹ the unpacked shape stands — results identical either way.
     #
-    # r12 (VERDICT item 1, guide §2.3/§4.2, tools/lp_agg_ab3/4/5.py): the
-    # packed candidate aggregate planned TWO back-to-back HashAggregates
-    # (partial+final in one stage — the partial shrank the stream only ~6%,
-    # measured 77% of executor CPU building two ~20.7 M-group maps). A/B'd
-    # fixes: single SortAggregate (replaceHashWithSortAgg) LOST — sorting
+    # r12 (VERDICT item 1, guide §2.3/§4.2; A/B in commit 64414c1 and
+    # OPTIMIZATION_r12.md): the packed candidate aggregate planned TWO
+    # back-to-back HashAggregates (partial+final in one stage — the partial
+    # shrank the stream only ~6%, measured 77% of executor CPU building two
+    # ~20.7 M-group maps). A/B'd fixes: single SortAggregate (replaceHashWithSortAgg) LOST — sorting
     # the stream costs more than the saved build; the winner is (a) the
     # pair ANTI-JOIN moved BELOW the pk exchange and ABOVE the aggregate —
     # result-identical (dropping wedges whose pk is an existing edge

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 
 @register(
@@ -60,23 +60,17 @@ def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# LEFT OUTER with an extra join-side predicate; count(col) skips NULLs so
+# customers with no 'F' orders report 0.
+register_ansi(
     "join_left_outer",
-    oracle="""
+    """
     SELECT c.c_custkey, count(o.o_orderkey) AS n_orders
     FROM customer c
     LEFT JOIN orders o ON o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
     GROUP BY c.c_custkey
     """,
 )
-def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER with an extra join-side predicate; count(col) skips NULLs so
-    customers with no 'F' orders report 0."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "join_left_outer")
 
 
 @register(
@@ -120,21 +114,15 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# LEFT SEMI join — customers having at least one big order.
+register_ansi(
     "join_semi",
-    oracle="""
+    """
     SELECT c_custkey, c_name
     FROM customer c
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
     """,
 )
-def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join — customers having at least one big order."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "join_semi")
 
 
 @register(

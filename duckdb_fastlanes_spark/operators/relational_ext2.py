@@ -11,12 +11,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import ROUND_SCALE, register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 
-@register(
+# RIGHT OUTER JOIN — preserved side is the build side; Spark plans it as
+# a mirrored left-outer, same shuffle profile.
+register_ansi(
     "join_right_outer",
-    oracle="""
+    """
     SELECT p.p_partkey, p.p_brand, l.l_orderkey, l.l_linenumber
     FROM (SELECT * FROM lineitem WHERE l_orderkey < 500) l
     RIGHT OUTER JOIN (SELECT * FROM part WHERE p_partkey < 200) p
@@ -24,14 +26,6 @@ from duckdb_fastlanes_spark.registry import ROUND_SCALE, register
     ORDER BY p.p_partkey, l.l_orderkey, l.l_linenumber
     """,
 )
-def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RIGHT OUTER JOIN — preserved side is the build side; Spark plans it as
-    a mirrored left-outer, same shuffle profile."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "join_right_outer")
 
 
 @register(
@@ -178,29 +172,24 @@ def window_distribution_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("s_nationkey", "s_suppkey")
 
 
-@register(
+# Explicit NULLS FIRST multi-key sort — always spell the null position:
+# DuckDB defaults NULLS LAST on ASC, Spark NULLS FIRST (SURVEY §7 risk
+# register), so implicit defaults silently diverge.
+register_ansi(
     "sort_nulls_ordering",
-    oracle="""
+    """
     SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg
     FROM customer
     WHERE c_custkey < 100
     ORDER BY seg ASC NULLS FIRST, c_custkey DESC
     """,
 )
-def sort_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit NULLS FIRST multi-key sort — always spell the null position:
-    DuckDB defaults NULLS LAST on ASC, Spark NULLS FIRST (SURVEY §7 risk
-    register), so implicit defaults silently diverge."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "sort_nulls_ordering")
 
 
-@register(
+# bool_and/bool_or (= every/any) aggregates.
+register_ansi(
     "agg_bool",
-    oracle="""
+    """
     SELECT o_orderstatus,
            bool_and(o_totalprice > 1000)  AS all_over_1k,
            bool_or(o_totalprice > 400000) AS any_over_400k,
@@ -210,15 +199,6 @@ def sort_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderstatus
     """,
 )
-def agg_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bool_and/bool_or (= every/any) aggregates."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "agg_bool")
 
 
 @register(
@@ -250,9 +230,13 @@ def scalar_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_orderkey", "l_linenumber")
 
 
-@register(
+# Edit-distance fuzzy matching for short strings (entity resolution on
+# names), blocked by nation so the pairwise Levenshtein runs inside buckets
+# — the same blocked-join discipline as the embedding near-dup, since edit
+# distance has no cheap LSH.
+register_ansi(
     "dedup_fuzzy_names",
-    oracle="""
+    """
     SELECT a.c_custkey AS key_a, b.c_custkey AS key_b,
            levenshtein(a.c_name, b.c_name) AS dist
     FROM customer a JOIN customer b
@@ -262,18 +246,6 @@ def scalar_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY key_a, key_b
     """,
 )
-def dedup_fuzzy_names(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance fuzzy matching for short strings (entity resolution on
-    names), blocked by nation so the pairwise Levenshtein runs inside buckets
-    — the same blocked-join discipline as the embedding near-dup, since edit
-    distance has no cheap LSH."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "dedup_fuzzy_names")
 
 
 @register(
@@ -312,9 +284,13 @@ def scalar_date_arith2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-@register(
+# TRY_CAST error-safe casting: malformed strings become NULL instead of
+# failing the job — at 100 TB a single bad row must never kill the query.
+# (lang is never numeric → count 0; the props slice is digits for 2-digit
+# k values only.)
+register_ansi(
     "scalar_try_cast",
-    oracle="""
+    """
     SELECT
         count(*)                                            AS n_rows,
         count(try_cast(lang AS INT))                        AS n_numeric_lang,
@@ -325,21 +301,14 @@ def scalar_date_arith2(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id = e.event_id
     """,
 )
-def scalar_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRY_CAST error-safe casting: malformed strings become NULL instead of
-    failing the job — at 100 TB a single bad row must never kill the query.
-    (lang is never numeric → count 0; the props slice is digits for 2-digit
-    k values only.)"""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "scalar_try_cast")
 
 
-@register(
+# Fixed-width histogram via floor-bucketing — one partial-aggregated
+# shuffle at bucket cardinality; the building block for distribution
+# profiling over any numeric column.
+register_ansi(
     "agg_histogram",
-    oracle="""
+    """
     SELECT CAST(floor(value / 10.0) AS BIGINT) AS bucket,
            count(*) AS n,
            round(min(value), 2) AS lo,
@@ -349,15 +318,6 @@ def scalar_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY bucket
     """,
 )
-def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram via floor-bucketing — one partial-aggregated
-    shuffle at bucket cardinality; the building block for distribution
-    profiling over any numeric column."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "agg_histogram")
 
 
 @register(
@@ -388,9 +348,11 @@ def agg_array_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Linear-regression aggregates (slope/intercept/R²) — single-pass
+# algebraic moments, so they partial-aggregate map-side like sum/count.
+register_ansi(
     "agg_regression",
-    oracle="""
+    """
     SELECT l_returnflag,
            round(regr_slope(l_extendedprice, l_quantity), 2)     AS slope,
            round(regr_intercept(l_extendedprice, l_quantity), 2) AS intercept,
@@ -401,19 +363,15 @@ def agg_array_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag
     """,
 )
-def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear-regression aggregates (slope/intercept/R²) — single-pass
-    algebraic moments, so they partial-aggregate map-side like sum/count."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "agg_regression")
 
 
-@register(
+# Tie-safe mode: native mode() tie-breaks engine-specifically (Spark
+# nondeterministic, DuckDB first-encountered), so the mode is computed from
+# explicit counts with max_by on (count, value) — ties resolve to the
+# lexicographically largest value on both engines, deterministically.
+register_ansi(
     "agg_mode",
-    oracle="""
+    """
     WITH counted AS (
         SELECT o_orderpriority, o_orderstatus, count(*) AS cnt
         FROM orders GROUP BY 1, 2
@@ -430,16 +388,6 @@ def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderpriority
     """,
 )
-def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-safe mode: native mode() tie-breaks engine-specifically (Spark
-    nondeterministic, DuckDB first-encountered), so the mode is computed from
-    explicit counts with max_by on (count, value) — ties resolve to the
-    lexicographically largest value on both engines, deterministically."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "agg_mode")
 
 
 @register(
@@ -598,9 +546,15 @@ def dq_integrity_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Distribution-shape moments (population skewness g1, population
+# variance) computed from explicit power sums on BOTH engines: the native
+# skewness()/kurtosis() use different estimators per engine (sample G1 in
+# DuckDB, population g1 in Spark), so cross-engine parity needs the
+# formula spelled out. Power sums are single-pass algebraic — map-side
+# partial aggregation like any sum.
+register_ansi(
     "agg_moments",
-    oracle="""
+    """
     SELECT l_returnflag,
            round((avg(l_quantity * l_quantity * l_quantity)
                   - 3 * avg(l_quantity) * avg(l_quantity * l_quantity)
@@ -614,20 +568,6 @@ def dq_integrity_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag
     """,
 )
-def agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-shape moments (population skewness g1, population
-    variance) computed from explicit power sums on BOTH engines: the native
-    skewness()/kurtosis() use different estimators per engine (sample G1 in
-    DuckDB, population g1 in Spark), so cross-engine parity needs the
-    formula spelled out. Power sums are single-pass algebraic — map-side
-    partial aggregation like any sum."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "agg_moments")
 
 
 @register(

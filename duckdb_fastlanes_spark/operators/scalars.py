@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 HUGE = 469231731687303715884105728  # reference's HUGEINT multiplier (test :79-90)
 
@@ -183,9 +183,10 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Math scalar matrix: abs/ceil/floor/sqrt/ln/power/mod/sign/greatest/least.
+register_ansi(
     "scalar_math_funcs",
-    oracle="""
+    """
     SELECT
         l_orderkey, l_linenumber,
         abs(l_quantity - 25)                    AS dev_from_25,
@@ -203,20 +204,12 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_orderkey % 25 = 0
     """,
 )
-def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math scalar matrix: abs/ceil/floor/sqrt/ln/power/mod/sign/greatest/least."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "scalar_math_funcs")
 
 
-@register(
+# CASE / COALESCE / NULLIF / IS DISTINCT FROM (reference B5, B6) / IF.
+register_ansi(
     "scalar_conditional",
-    oracle="""
+    """
     SELECT
         o_orderkey,
         CASE WHEN o_totalprice > 300000 THEN 'big'
@@ -229,13 +222,6 @@ def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CASE / COALESCE / NULLIF / IS DISTINCT FROM (reference B5, B6) / IF."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "scalar_conditional")
 
 
 @register(

@@ -1,103 +1,52 @@
 """Set operations (SURVEY.md §2.C Set ops row): UNION [ALL] / INTERSECT / EXCEPT.
 
-Spark maps 1:1 (union/unionAll = UNION ALL, distinct() for UNION,
-intersect/intersectAll, exceptAll). All shapes here run on key projections so
-the shuffled payload is narrow.
+Every shape is plain SQL that both engines run verbatim (``register_ansi``);
+Catalyst rewrites INTERSECT/EXCEPT into semi/anti joins. All shapes run on
+key projections so the shuffled payload is narrow.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
-
-
-def _big_order_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 250000)
-        .select(F.col("o_orderkey").alias("key"))
-    )
-
-
-def _heavy_lineitem_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= 48)
-        .select(F.col("l_orderkey").alias("key"))
-    )
-
+from duckdb_fastlanes_spark.registry import register_ansi
 
 _ORACLE_A = "SELECT o_orderkey AS key FROM orders WHERE o_totalprice > 250000"
 _ORACLE_B = "SELECT l_orderkey AS key FROM lineitem WHERE l_quantity >= 48"
 
 
-@register(
+# UNION (distinct) of two key sets; re-aggregated so the result is a set.
+register_ansi(
     "setop_union",
-    oracle=f"SELECT key, count(*) AS n FROM (({_ORACLE_A}) UNION ({_ORACLE_B})) GROUP BY key",
+    f"SELECT key, count(*) AS n FROM (({_ORACLE_A}) UNION ({_ORACLE_B})) GROUP BY key",
 )
-def setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION (distinct) of two key sets; re-aggregated so the result is a set."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "setop_union")
 
 
-@register(
+# UNION ALL keeps duplicates — counts reflect multiplicity from both sides.
+register_ansi(
     "setop_union_all",
-    oracle=f"SELECT key, count(*) AS n FROM (({_ORACLE_A}) UNION ALL ({_ORACLE_B})) GROUP BY key",
+    f"SELECT key, count(*) AS n FROM (({_ORACLE_A}) UNION ALL ({_ORACLE_B})) GROUP BY key",
 )
-def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL keeps duplicates — counts reflect multiplicity from both sides."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "setop_union_all")
 
 
-@register(
+# INTERSECT (distinct) — big orders that also have a heavy line.
+register_ansi(
     "setop_intersect",
-    oracle=f"({_ORACLE_A}) INTERSECT ({_ORACLE_B})",
+    f"({_ORACLE_A}) INTERSECT ({_ORACLE_B})",
 )
-def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (distinct) — big orders that also have a heavy line."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "setop_intersect")
 
 
-@register(
+# EXCEPT (distinct) — big orders with no heavy line (DataFrame.subtract).
+register_ansi(
     "setop_except",
-    oracle=f"({_ORACLE_A}) EXCEPT ({_ORACLE_B})",
+    f"({_ORACLE_A}) EXCEPT ({_ORACLE_B})",
 )
-def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct) — big orders with no heavy line (DataFrame.subtract)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "setop_except")
 
 
-@register(
+# INTERSECT ALL — multiplicity = min(left count, right count) per key.
+register_ansi(
     "setop_intersect_all",
-    oracle=f"""
+    f"""
     SELECT key, count(*) AS n
     FROM (({_ORACLE_B}) INTERSECT ALL (SELECT l_orderkey AS key FROM lineitem WHERE l_discount > 0.08))
     GROUP BY key
     """,
 )
-def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL — multiplicity = min(left count, right count) per key."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "setop_intersect_all")

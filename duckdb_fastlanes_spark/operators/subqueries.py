@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_fastlanes_spark.catalog import register_views
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 _SCALAR_SQL = """
 SELECT o_orderkey, round(o_totalprice, 2) AS price
@@ -70,16 +70,8 @@ def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_EXISTS_CORR_SQL)
 
 
-@register("subquery_not_in", oracle=_NOT_IN_SQL)
-def subquery_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN (null-aware anti join; subquery side is NOT NULL here so 2VL)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "subquery_not_in")
+# NOT IN (null-aware anti join; subquery side is NOT NULL here so 2VL).
+register_ansi("subquery_not_in", _NOT_IN_SQL)
 
 
 @register("subquery_correlated_scalar", oracle=_CORR_SCALAR_SQL)

@@ -12,9 +12,7 @@ scale-up; the only full-data pass is the (pushed-down) scan itself.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from duckdb_fastlanes_spark.catalog import table
 from duckdb_fastlanes_spark.registry import ROUND_SCALE, register
 
 Q1_CUTOFF = "1998-09-02"

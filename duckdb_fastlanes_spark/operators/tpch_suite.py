@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import ROUND_SCALE, register
+from duckdb_fastlanes_spark.registry import ROUND_SCALE, register, register_ansi
 
 
 def _ts(s: str) -> F.Column:
@@ -110,9 +110,10 @@ def _usum_sql(expr: str) -> str:
     )
 
 
-@register(
+# Q3 shipping priority: 3-way join → agg → top-10 by revenue.
+register_ansi(
     "tpch_q3",
-    oracle="""
+    """
     SELECT
         l_orderkey,
         round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 1000000, 0) AS DECIMAL(25,0))) AS DOUBLE) / 1000000.0, 2) AS revenue,
@@ -128,20 +129,14 @@ def _usum_sql(expr: str) -> str:
     LIMIT 10
     """,
 )
-def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q3 shipping priority: 3-way join → agg → top-10 by revenue."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "tpch_q3")
 
 
-@register(
+# Q4 order-priority checking, adapted: 'late' = any line shipped >80 days
+# after the order date (the catalog schema has no commit/receipt dates).
+# Correlated EXISTS → left-semi join.
+register_ansi(
     "tpch_q4",
-    oracle="""
+    """
     SELECT o_orderpriority, count(*) AS order_count
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1997-07-01 00:00:00'
@@ -155,20 +150,13 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderpriority
     """,
 )
-def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q4 order-priority checking, adapted: 'late' = any line shipped >80 days
-    after the order date (the driver schema has no commit/receipt dates).
-    Correlated EXISTS → left-semi join."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q4")
 
 
-@register(
+# Q5 local-supplier volume: 6-way star join with the classic
+# c_nationkey = s_nationkey co-location constraint.
+register_ansi(
     "tpch_q5",
-    oracle="""
+    """
     SELECT n_name, round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 1000000, 0) AS DECIMAL(25,0))) AS DOUBLE) / 1000000.0, 2) AS revenue
     FROM customer, orders, lineitem, supplier, nation, region
     WHERE c_custkey = o_custkey
@@ -184,21 +172,13 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, n_name
     """,
 )
-def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q5 local-supplier volume: 6-way star join with the classic
-    c_nationkey = s_nationkey co-location constraint."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "tpch_q5")
 
 
-@register(
+# Q6 forecasting revenue change: pure scan-filter-agg; every predicate
+# reaches PushedFilters so row groups outside the ship-year are skipped.
+register_ansi(
     "tpch_q6",
-    oracle="""
+    """
     SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -207,14 +187,6 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_quantity < 24
     """,
 )
-def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6 forecasting revenue change: pure scan-filter-agg; every predicate
-    reaches PushedFilters so row groups outside the ship-year are skipped."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q6")
 
 
 @register(
@@ -285,9 +257,10 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Q8 national market share: 8-way join, conditional-aggregate ratio.
+register_ansi(
     "tpch_q8",
-    oracle="""
+    """
     SELECT o_year,
            round(sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END)
                  / sum(volume), 4) AS mkt_share
@@ -311,15 +284,6 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_year
     """,
 )
-def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8 national market share: 8-way join, conditional-aggregate ratio."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "tpch_q8")
 
 
 @register(
@@ -390,9 +354,10 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Q10 returned-item reporting: join + agg + top-20.
+register_ansi(
     "tpch_q10",
-    oracle="""
+    """
     SELECT c_custkey, c_name,
            round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 1000000, 0) AS DECIMAL(25,0))) AS DOUBLE) / 1000000.0, 2) AS revenue,
            round(c_acctbal, 2) AS acctbal, n_name
@@ -408,20 +373,13 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q10 returned-item reporting: join + agg + top-20."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "tpch_q10")
 
 
-@register(
+# Q12 shipping-mode priority split, adapted: grouped by l_linestatus
+# (no l_shipmode column) over lines shipped within 90 days of ordering.
+register_ansi(
     "tpch_q12",
-    oracle="""
+    """
     SELECT l_linestatus,
            CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                          THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -436,19 +394,13 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_linestatus
     """,
 )
-def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q12 shipping-mode priority split, adapted: grouped by l_linestatus
-    (no l_shipmode column) over lines shipped within 90 days of ordering."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q12")
 
 
-@register(
+# Q13 customer order-count distribution: left-outer join preserving
+# zero-order customers, then a second aggregation over the first.
+register_ansi(
     "tpch_q13",
-    oracle="""
+    """
     SELECT c_count, count(*) AS custdist
     FROM (
         SELECT c_custkey, count(o_orderkey) AS c_count
@@ -460,19 +412,12 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custdist DESC, c_count DESC
     """,
 )
-def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q13 customer order-count distribution: left-outer join preserving
-    zero-order customers, then a second aggregation over the first."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q13")
 
 
-@register(
+# Q14 promotion effect: conditional-aggregate ratio over a month window.
+register_ansi(
     "tpch_q14",
-    oracle="""
+    """
     SELECT round(
         100.00 * sum(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount)
                           ELSE 0 END)
@@ -483,13 +428,6 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
     """,
 )
-def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q14 promotion effect: conditional-aggregate ratio over a month window."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q14")
 
 
 @register(
@@ -533,9 +471,12 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Q16 parts/supplier relationship, adapted: supplier-per-part counted
+# through lineitem (no partsupp table); NOT-predicates + IN-list + distinct
+# aggregate is the query's shape.
+register_ansi(
     "tpch_q16",
-    oracle="""
+    """
     SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
     FROM lineitem, part
     WHERE p_partkey = l_partkey
@@ -546,20 +487,13 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
 )
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q16 parts/supplier relationship, adapted: supplier-per-part counted
-    through lineitem (no partsupp table); NOT-predicates + IN-list + distinct
-    aggregate is the query's shape."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q16")
 
 
-@register(
+# Q17 small-quantity-order revenue: correlated scalar subquery
+# decorrelated into an aggregate join (per-part avg joined back).
+register_ansi(
     "tpch_q17",
-    oracle="""
+    """
     SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
     FROM lineitem, part
     WHERE p_partkey = l_partkey
@@ -569,19 +503,12 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     """,
 )
-def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q17 small-quantity-order revenue: correlated scalar subquery
-    decorrelated into an aggregate join (per-part avg joined back)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q17")
 
 
-@register(
+# Q18 large-volume customers: IN-subquery with HAVING → semi join.
+register_ansi(
     "tpch_q18",
-    oracle="""
+    """
     SELECT c_name, c_custkey, o_orderkey, o_orderdate,
            round(o_totalprice, 2) AS o_totalprice, sum(l_quantity) AS sum_qty
     FROM customer, orders, lineitem
@@ -595,20 +522,15 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 100
     """,
 )
-def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q18 large-volume customers: IN-subquery with HAVING → semi join."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "tpch_q18")
 
 
-@register(
+# Q19 discounted revenue: disjunctive multi-column predicate over a join
+# (adapted: size/brand/quantity bands; no container/shipmode columns).
+# The OR-of-ANDs stays a single join condition — Catalyst pushes the
+# per-side conjuncts (p_brand/p_size to part, l_quantity to lineitem).
+register_ansi(
     "tpch_q19",
-    oracle="""
+    """
     SELECT round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 1000000, 0) AS DECIMAL(25,0))) AS DOUBLE) / 1000000.0, 2) AS revenue
     FROM lineitem, part
     WHERE p_partkey = l_partkey
@@ -620,21 +542,14 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
             AND l_quantity >= 20 AND l_quantity <= 30))
     """,
 )
-def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q19 discounted revenue: disjunctive multi-column predicate over a join
-    (adapted: size/brand/quantity bands; no container/shipmode columns).
-    The OR-of-ANDs stays a single join condition — Catalyst pushes the
-    per-side conjuncts (p_brand/p_size to part, l_quantity to lineitem)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "tpch_q19")
 
 
-@register(
+# Q21 suppliers who kept orders waiting, adapted: with no receipt/commit
+# dates, the 'blocking' supplier is the one whose line shipped last on a
+# multi-supplier F-status order. EXISTS/NOT-EXISTS become aggregate joins.
+register_ansi(
     "tpch_q21",
-    oracle="""
+    """
     WITH last_ship AS (
         SELECT l_orderkey, max(l_shipdate) AS max_ship
         FROM lineitem GROUP BY l_orderkey
@@ -658,17 +573,6 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 25
     """,
 )
-def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q21 suppliers who kept orders waiting, adapted: with no receipt/commit
-    dates, the 'blocking' supplier is the one whose line shipped last on a
-    multi-supplier F-status order. EXISTS/NOT-EXISTS become aggregate joins."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "tpch_q21")
 
 
 @register(

@@ -12,16 +12,25 @@ runtime-filter join pattern Spark itself applies at scale
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 
-@register(
+# Slowly-changing-dimension type 2 build: collapse each user's event
+# stream into versioned state rows with [eff_from, eff_to) validity ranges
+# and an is_current flag — the standard dimension-table maintenance
+# pattern. Two windows over the same (user_id, time) partitioning: change
+# detection via lag, range closing via lead — one shuffle on user_id,
+# both windows reuse it. Scale shape: partitions by user (no global
+# window), so 100 TB of events with bounded per-user history streams
+# through without skew; eff_from ties are broken by event_id in the
+# change-detection window.
+register_ansi(
     "dim_scd2_user_state",
-    oracle="""
+    """
     WITH ordered AS (
         SELECT user_id, event_type, ts,
                lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -42,23 +51,6 @@ from duckdb_fastlanes_spark.registry import register
     ORDER BY user_id, eff_from
     """,
 )
-def dim_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type 2 build: collapse each user's event
-    stream into versioned state rows with [eff_from, eff_to) validity ranges
-    and an is_current flag — the standard dimension-table maintenance
-    pattern. Two windows over the same (user_id, time) partitioning: change
-    detection via lag, range closing via lead — one shuffle on user_id,
-    both windows reuse it. Scale shape: partitions by user (no global
-    window), so 100 TB of events with bounded per-user history streams
-    through without skew; eff_from ties are broken by event_id in the
-    change-detection window."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "dim_scd2_user_state")
 
 
 @register(
@@ -126,9 +118,18 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Equal-frequency discretization: ntile(10) over the price order gives
+# ten buckets of (near-)equal row count with their value ranges — the
+# feature-prep binning a training pipeline applies to heavy-tailed
+# numerics (where equal-WIDTH bins put 99% of rows in bin 1; compare
+# agg_histogram). Ties broken by key so both engines assign identically.
+# Scale note: a global ntile funnels through one window partition; at
+# 100 TB the same output comes from approx_percentile boundaries + a
+# row-local range assignment (agg_percentiles has the boundary half) —
+# this operator keeps the exact-semantics variant the oracle can check.
+register_ansi(
     "binning_equal_frequency",
-    oracle="""
+    """
     SELECT bucket, count(*) AS n,
            round(min(o_totalprice), 2) AS lo, round(max(o_totalprice), 2) AS hi
     FROM (
@@ -139,21 +140,6 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY bucket ORDER BY bucket
     """,
 )
-def binning_equal_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-frequency discretization: ntile(10) over the price order gives
-    ten buckets of (near-)equal row count with their value ranges — the
-    feature-prep binning a training pipeline applies to heavy-tailed
-    numerics (where equal-WIDTH bins put 99% of rows in bin 1; compare
-    agg_histogram). Ties broken by key so both engines assign identically.
-    Scale note: a global ntile funnels through one window partition; at
-    100 TB the same output comes from approx_percentile boundaries + a
-    row-local range assignment (agg_percentiles has the boundary half) —
-    this operator keeps the exact-semantics variant the oracle can check."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "binning_equal_frequency")
 
 
 @register(
@@ -206,9 +192,15 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Feature scaling audit: per-group z-score of quantity (vs global
+# mean/std) and min-max-scaled price — the normalization a feature
+# pipeline applies before training, verified groupwise so rounding stays
+# off knife-edges. Spark shape: the 1-row global-stats aggregate
+# broadcast-joins onto the per-group aggregate — two map-side-combined
+# aggs, no global window, scale-indifferent.
+register_ansi(
     "feature_scale_stats",
-    oracle="""
+    """
     WITH g AS (
         SELECT avg(l_quantity) AS mq, stddev_samp(l_quantity) AS sq,
                min(l_extendedprice) AS lop, max(l_extendedprice) AS hip
@@ -223,20 +215,6 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag ORDER BY l_returnflag
     """,
 )
-def feature_scale_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature scaling audit: per-group z-score of quantity (vs global
-    mean/std) and min-max-scaled price — the normalization a feature
-    pipeline applies before training, verified groupwise so rounding stays
-    off knife-edges. Spark shape: the 1-row global-stats aggregate
-    broadcast-joins onto the per-group aggregate — two map-side-combined
-    aggs, no global window, scale-indifferent."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: the registered oracle is pure ANSI SQL that Spark parses
-    # verbatim and plans IDENTICALLY to the former Column tree
-    # (plan-feature-gated substitution; see catalog.shared_ansi) —
-    # one JVM parse, literal both-engines parity on the same text.
-    return shared_ansi(spark, sf_dir, "feature_scale_stats")
 
 
 @register(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_fastlanes_spark.catalog import table
-from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.registry import register, register_ansi
 
 
 @register(
@@ -45,9 +45,15 @@ def window_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# rank / dense_rank / ntile. rank ties on equal l_quantity are fine (rank
+# is tie-stable); ntile is POSITIONAL, so its ORDER BY must be total —
+# (l_orderkey, l_linenumber) is unique in the test corpus but collides
+# in the synthesized 100× cell, where an underspecified ntile order
+# assigned tied rows to different quartiles per engine; the extra sort
+# keys pin it on every corpus.
+register_ansi(
     "window_rank_dense",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber,
            rank()       OVER (PARTITION BY l_orderkey ORDER BY l_quantity)       AS qty_rank,
            dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_quantity)       AS qty_dense_rank,
@@ -58,23 +64,12 @@ def window_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_orderkey % 50 = 0
     """,
 )
-def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank / dense_rank / ntile. rank ties on equal l_quantity are fine (rank
-    is tie-stable); ntile is POSITIONAL, so its ORDER BY must be total —
-    (l_orderkey, l_linenumber) is unique in the driver corpus but collides
-    in the synthesized 100× cell, where an underspecified ntile order
-    assigned tied rows to different quartiles per engine; the extra sort
-    keys pin it on every corpus."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "window_rank_dense")
 
 
-@register(
+# lag/lead analytics per user ordered by time (event_id tiebreak).
+register_ansi(
     "window_lag_lead",
-    oracle="""
+    """
     SELECT event_id, user_id,
            round(value, 2) AS value,
            round(lag(value)  OVER (PARTITION BY user_id ORDER BY ts, event_id), 2) AS prev_value,
@@ -83,18 +78,16 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
 )
-def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead analytics per user ordered by time (event_id tiebreak)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "window_lag_lead")
 
 
-@register(
+# ROWS BETWEEN frames: 3-row moving sum + frame count + running min per
+# user. The moving sum is emitted as exact integer cents: ``value`` sits on a
+# 2-decimal grid, and Spark's retractable sliding-sum accumulates different
+# low-order bits than DuckDB's recompute — integer cents are engine-stable
+# while round(avg, 2) flips on exact .005 boundaries (2-row frames).
+register_ansi(
     "window_moving_frame",
-    oracle="""
+    """
     SELECT event_id, user_id,
            CAST(round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                        ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) * 100) AS BIGINT) AS moving_sum3_cents,
@@ -105,22 +98,12 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
 )
-def window_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROWS BETWEEN frames: 3-row moving sum + frame count + running min per
-    user. The moving sum is emitted as exact integer cents: ``value`` sits on a
-    2-decimal grid, and Spark's retractable sliding-sum accumulates different
-    low-order bits than DuckDB's recompute — integer cents are engine-stable
-    while round(avg, 2) flips on exact .005 boundaries (2-row frames)."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "window_moving_frame")
 
 
-@register(
+# RANGE BETWEEN value frame — peers within ±50k price per customer.
+register_ansi(
     "window_range_frame",
-    oracle="""
+    """
     SELECT o_orderkey, o_custkey,
            round(o_totalprice, 2) AS price,
            count(*) OVER (PARTITION BY o_custkey ORDER BY o_totalprice
@@ -128,18 +111,13 @@ def window_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE BETWEEN value frame — peers within ±50k price per customer."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "window_range_frame")
 
 
-@register(
+# first_value/last_value with full-partition frame, collapsed to one row
+# per user.
+register_ansi(
     "window_first_last",
-    oracle="""
+    """
     SELECT DISTINCT user_id,
            first_value(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                          ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_event,
@@ -148,14 +126,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
 )
-def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first_value/last_value with full-partition frame, collapsed to one row
-    per user."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "window_first_last")
 
 
 @register(
@@ -221,9 +191,14 @@ def window_nth_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Ratio-to-report: each (status, priority) cell's share of its status
+# group — a window aggregate OVER an aggregate, the standard percent-of-
+# total report. The window runs on the already-reduced group table
+# (|statuses × priorities| rows), so the expensive pass is the map-side-
+# combined aggregate; the share window is nearly free at any scale.
+register_ansi(
     "window_ratio_to_report",
-    oracle="""
+    """
     WITH g AS (
         SELECT o_orderstatus, o_orderpriority,
                sum(o_totalprice) AS revenue
@@ -237,17 +212,6 @@ def window_nth_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderstatus, o_orderpriority
     """,
 )
-def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ratio-to-report: each (status, priority) cell's share of its status
-    group — a window aggregate OVER an aggregate, the standard percent-of-
-    total report. The window runs on the already-reduced group table
-    (|statuses × priorities| rows), so the expensive pass is the map-side-
-    combined aggregate; the share window is nearly free at any scale."""
-    from duckdb_fastlanes_spark.catalog import shared_ansi
-
-    # r7: pure-ANSI surface — both engines run the identical oracle
-    # text; plan-feature-gated substitution (see catalog.shared_ansi)
-    return shared_ansi(spark, sf_dir, "window_ratio_to_report")
 
 
 @register(

@@ -56,10 +56,6 @@ MIX_TEMPERATURE = 2.0
 _TOKENS = r"[a-z0-9]+"
 
 
-def _n_tokens_col():
-    return F.size(F.regexp_extract_all(F.lower("text"), F.lit(_TOKENS), F.lit(0)))
-
-
 _ORACLE_N_TOKENS = f"len(regexp_extract_all(lower(text), '{_TOKENS}'))"
 
 

@@ -52,13 +52,6 @@ def _norm(text: Column) -> Column:
     return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
 
 
-def _words(text: Column) -> Column:
-    # [a-z0-9]+ run extraction is invariant to trimming and whitespace
-    # collapsing, so tokenization needs only lower() — not the full _norm()
-    # (which would add a second regex pass over every document).
-    return F.regexp_extract_all(F.lower(text), F.lit(r"[a-z0-9]+"), F.lit(0))
-
-
 def _shingle_rows(d: DataFrame, distinct: bool = True) -> DataFrame:
     """Word-3-gram shingles as (doc_id, shingle) rows (distinct by default;
     pass distinct=False when the consumer is duplicate-insensitive — a
@@ -92,16 +85,6 @@ def _shingle_rows(d: DataFrame, distinct: bool = True) -> DataFrame:
         )
     )
     return out.distinct() if distinct else out
-
-
-def _shingle_sets(d: DataFrame) -> DataFrame:
-    """(doc_id, shingles array<string>, n_sh) — set semantics per doc."""
-    return (
-        _shingle_rows(d)
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("shingles"))
-        .select("doc_id", "shingles", F.size("shingles").alias("n_sh"))
-    )
 
 
 def _pin_merge(df: DataFrame, sf_dir: str) -> DataFrame:

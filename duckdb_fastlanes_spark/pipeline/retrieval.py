@@ -24,9 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from duckdb_fastlanes_spark.catalog import table
 from duckdb_fastlanes_spark.pipeline.similarity import QUERY_VEC_ID
 from duckdb_fastlanes_spark.pipeline.text import BM25_B, BM25_K1, BM25_TERMS
 from duckdb_fastlanes_spark.registry import register

@@ -86,6 +86,24 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
+def register_ansi(name: str, sql: str) -> None:
+    """Register a query whose Spark body IS its oracle text.
+
+    Catalyst parses and plans the same ANSI SQL that DuckDB runs as the
+    oracle: one JVM parse instead of a Column tree built call by call, and
+    both engines answer from the identical text. Used only where that text
+    plans with the same join/exchange features as a hand-built DataFrame
+    would; queries whose DataFrame form encodes a better plan (extra
+    broadcasts, merge pins) keep it."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from duckdb_fastlanes_spark.catalog import sql_q
+
+        return sql_q(spark, sf_dir, sql)
+
+    register(name, sql)(run)
+
+
 def queries() -> dict[str, QueryFn]:
     _load()
     return dict(_QUERIES)

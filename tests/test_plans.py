@@ -97,9 +97,9 @@ def test_q19_disjunctive_predicate_splits_per_side(spark):
     quantity bands reach the lineitem scan, brand/size reach the part scan —
     at 100 TB this is the difference between scanning 2 columns' worth of
     matching row groups and scanning everything."""
-    from duckdb_fastlanes_spark.operators.tpch_suite import tpch_q19
+    from duckdb_fastlanes_spark.registry import queries
 
-    plan = explain_str(tpch_q19(spark, SF_DIR))
+    plan = explain_str(queries()["tpch_q19"](spark, SF_DIR))
     pushed_blocks = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("l_quantity" in b for b in pushed_blocks)
     assert any("p_brand" in b and "p_size" in b for b in pushed_blocks)
@@ -108,9 +108,9 @@ def test_q19_disjunctive_predicate_splits_per_side(spark):
 def test_q5_star_join_broadcasts_dims(spark):
     """Q5's six-way star join must broadcast the dimension tables (region,
     nation at minimum) and never degenerate into a cartesian product."""
-    from duckdb_fastlanes_spark.operators.tpch_suite import tpch_q5
+    from duckdb_fastlanes_spark.registry import queries
 
-    plan = explain_str(tpch_q5(spark, SF_DIR), "simple")
+    plan = explain_str(queries()["tpch_q5"](spark, SF_DIR), "simple")
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
