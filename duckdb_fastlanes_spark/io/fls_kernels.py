@@ -26,9 +26,10 @@ un-vendored external FastLanes library, see fls_native.py module docstring):
 - Uncompressed (kernels/uncompressed_kernel.hpp) → raw little-endian
 - FSST (symbol-table string compression, ≤255 symbols of 1-8 bytes +
   escape byte; kernels/fsst_kernel.hpp:11-59, fsst_dict_kernel.hpp:18-80;
-  published FSST scheme) → ``fsst_build_table`` / ``fsst_encode`` /
-  ``fsst_decode`` — table built by the paper's iterative greedy
-  refinement, shared per chunk like the reference's per-segment table
+  published FSST scheme) → ``fsst_build_table`` / ``fsst_encoder`` /
+  ``fsst_encode`` / ``fsst_decode`` — table built by the paper's iterative
+  greedy refinement, shared per chunk like the reference's per-segment
+  table
 - Frequency (one frequent value + exception positions/values;
   kernels/frequency_kernel.hpp:8-69) → ``freq_encode`` / ``freq_decode``
 - SLPatch (patched FFOR: bulk-width bit-packing + exception patching;
@@ -56,25 +57,19 @@ _U64 = np.uint64
 # ---------------------------------------------------------------- bit packing
 def pack_bits(vals: np.ndarray, width: int) -> bytes:
     """Pack ``vals`` (uint64 array, each < 2**width) into dense little-endian
-    ``width``-bit fields. width == 0 → empty payload (all values are 0)."""
+    ``width``-bit fields: value i occupies bits [i*width, (i+1)*width) of
+    the stream, zero-padded to whole 64-bit words. width == 0 → empty
+    payload (all values are 0). The ``width`` low bits of each value,
+    unpacked LSB-first from its little-endian bytes and packed back
+    row-major, are exactly that stream."""
     if width == 0:
         return b""
-    v = vals.astype(_U64, copy=False)
-    n = len(v)
-    bitpos = np.arange(n, dtype=_U64) * _U64(width)
-    word = (bitpos >> _U64(6)).astype(np.int64)
-    off = bitpos & _U64(63)
-    out = np.zeros(int((n * width + 63) // 64), dtype=_U64)
-    np.bitwise_or.at(out, word, (v << off) & _U64(0xFFFFFFFFFFFFFFFF))
-    # bits that spill into the next word: v >> (64 - off), guarding off == 0
-    # (a shift by 64 is undefined; when off == 0 nothing spills)
-    spill = off > _U64(0)
-    if spill.any():
-        hi = v[spill] >> (_U64(64) - off[spill])
-        w2 = word[spill] + 1
-        keep = hi != _U64(0)
-        np.bitwise_or.at(out, w2[keep], hi[keep])
-    return out.tobytes()
+    v = np.ascontiguousarray(vals, dtype="<u8")
+    bits = np.unpackbits(
+        v.view(np.uint8).reshape(len(v), 8), axis=1, count=width, bitorder="little"
+    )
+    packed = np.packbits(bits, bitorder="little")
+    return packed.tobytes() + bytes(-len(packed) % 8)
 
 
 def unpack_bits(buf: bytes, width: int, n: int) -> np.ndarray:
@@ -94,6 +89,12 @@ def unpack_bits(buf: bytes, width: int, n: int) -> np.ndarray:
 
 
 # ----------------------------------------------------------------------- FFOR
+def _deltas(a: np.ndarray, base: int) -> np.ndarray:
+    """``a - base`` as uint64; wraps correctly for the full int64 domain
+    (every delta of a vector against its own minimum is in [0, 2**64))."""
+    return a.astype(_U64) - _U64(base & 0xFFFFFFFFFFFFFFFF)
+
+
 def ffor_encode(arr: np.ndarray) -> tuple[int, int, bytes]:
     """Frame-of-reference + bit-pack one integer vector.
 
@@ -103,12 +104,11 @@ def ffor_encode(arr: np.ndarray) -> tuple[int, int, bytes]:
     always non-negative (unffor_kernel.hpp reinterprets to the signed view
     after the unsigned unpack+add, same algebra)."""
     a = arr.astype(np.int64, copy=False)
-    base = int(a.min()) if len(a) else 0
-    # delta in uint64 wraps correctly for the full int64 domain
-    delta = (a.astype(_U64) - _U64(base & 0xFFFFFFFFFFFFFFFF)) & _U64(0xFFFFFFFFFFFFFFFF)
-    mx = int(delta.max()) if len(delta) else 0
-    width = int(mx).bit_length()
-    return base, width, pack_bits(delta, width)
+    if not len(a):
+        return 0, 0, b""
+    base = int(a.min())
+    width = (int(a.max()) - base).bit_length()
+    return base, width, pack_bits(_deltas(a, base), width)
 
 
 def ffor_decode(base: int, width: int, payload: bytes, n: int) -> np.ndarray:
@@ -184,9 +184,9 @@ def alp_encode(
     so the placeholder value is free), exc_pos/exc_vals = positions + raw
     doubles of values the scheme cannot represent (inf/nan/irrational)."""
     t = _alp_try(v, e, f)
-    bad = np.isnan(t) | np.isnan(v) | ~np.isfinite(v)
-    # NaN input encodes exactly only via exception (NaN != NaN)
-    bad |= np.isnan(v)
+    # non-finite inputs (NaN != NaN) fail the exactness check, so they are
+    # NaN in t and land on the exception path with every inexact value
+    bad = np.isnan(t)
     # -0.0 == 0.0 passes the exactness check but would decode as +0.0,
     # losing the IEEE-754 sign bit — route it through the exception path
     # so the roundtrip stays BYTE-exact, not merely value-equal (matters
@@ -246,37 +246,39 @@ def fsst_build_table(sample: bytes, iterations: int = 4) -> list[bytes]:
     if not sample:
         return table
     for _ in range(iterations):
-        segs = [m.group() for m in _fsst_pattern(table).finditer(sample)]
-        gains = Counter()
-        for s in segs:
-            gains[s] += len(s)
-        for a, b in zip(segs, segs[1:]):
-            ab = a + b
+        segs = _fsst_pattern(table).findall(sample)
+        gains = {s: c * len(s) for s, c in Counter(segs).items()}
+        for ab, c in Counter(map(bytes.__add__, segs, segs[1:])).items():
             if len(ab) <= FSST_MAX_SYMLEN:
-                gains[ab] += len(ab)
+                gains[ab] = gains.get(ab, 0) + c * len(ab)
         ranked = sorted(gains.items(), key=lambda kv: (-kv[1], kv[0]))
         table = [s for s, _ in ranked[:FSST_MAX_SYMBOLS]]
     return table
 
 
-def fsst_encode(blob: bytes, table: list[bytes], pat=None) -> bytes:
+def fsst_encoder(table: list[bytes]):
+    """Encoder for one symbol table, built once and shared by every string
+    of a chunk: the tokenizer from :func:`_fsst_pattern` plus a token →
+    code map holding one code byte per symbol and an (escape, literal)
+    pair for every other single byte. ``encode(blob)`` maps each greedy
+    longest-match token of ``blob`` through that map."""
+    pat = _fsst_pattern(table)
+    codes = {bytes([b]): bytes([FSST_ESCAPE, b]) for b in range(256)}
+    codes.update((s, bytes([i])) for i, s in enumerate(table))
+    findall, code = pat.findall, codes.__getitem__
+
+    def encode(blob: bytes) -> bytes:
+        return b"".join(map(code, findall(blob)))
+
+    return encode
+
+
+def fsst_encode(blob: bytes, table: list[bytes]) -> bytes:
     """Encode one byte string: greedy longest-match against the table →
     one code byte per symbol; bytes not in the table are emitted as
-    (escape, literal) pairs. Pass ``pat`` (from :func:`_fsst_pattern`) to
-    amortize the tokenizer across many strings."""
-    if pat is None:
-        pat = _fsst_pattern(table)
-    idx = {s: i for i, s in enumerate(table)}
-    out = bytearray()
-    for m in pat.finditer(blob):
-        s = m.group()
-        i = idx.get(s)
-        if i is None:
-            out.append(FSST_ESCAPE)
-            out += s
-        else:
-            out.append(i)
-    return bytes(out)
+    (escape, literal) pairs. Encoding many strings against one table goes
+    through :func:`fsst_encoder` instead."""
+    return fsst_encoder(table)(blob)
 
 
 def fsst_decode(code: bytes, table: list[bytes]) -> bytes:
@@ -315,10 +317,22 @@ def freq_encode(arr: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
     a = arr.astype(np.int64, copy=False)
     if len(a) == 0:
         return 0, np.zeros(0, dtype=np.uint16), a[:0]
-    vals, cnts = np.unique(a, return_counts=True)
-    top = int(vals[int(cnts.argmax())])
+    top, _ = freq_top(np.sort(a))
     exc_pos = np.flatnonzero(a != top)
     return top, exc_pos.astype(np.uint16), a[exc_pos]
+
+
+def freq_top(sorted_vals: np.ndarray) -> tuple[int, int]:
+    """Most frequent value of a non-empty ascending-sorted vector and its
+    count; ties go to the smallest value."""
+    n = len(sorted_vals)
+    first = np.empty(n + 1, dtype=bool)
+    first[0] = first[n] = True
+    np.not_equal(sorted_vals[1:], sorted_vals[:-1], out=first[1:n])
+    bounds = np.flatnonzero(first)  # run starts, then n
+    counts = bounds[1:] - bounds[:-1]
+    i = int(counts.argmax())
+    return int(sorted_vals[bounds[i]]), int(counts[i])
 
 
 def freq_decode(
@@ -331,6 +345,26 @@ def freq_decode(
 
 
 # -------------------------------------------------------------------- SLPatch
+#: 2**w for w = 0..63; a delta is an exception at width w iff it is >= 2**w
+_POW2 = _U64(1) << np.arange(64, dtype=_U64)
+
+
+def slpatch_width(sorted_vals: np.ndarray) -> tuple[int, int]:
+    """SLPatch bulk width for an ascending-sorted int64 vector, with its
+    exception count. The width minimizes packed bytes ``(n*w + 7) // 8``
+    plus 10 B per exception (delta from the minimum >= 2**w) over
+    w = 0..63, smallest w on ties; it is 64 (no exceptions) unless some
+    width is strictly cheaper than that."""
+    n = len(sorted_vals)
+    deltas = _deltas(sorted_vals, int(sorted_vals[0]) if n else 0)  # ascending
+    n_exc = n - np.searchsorted(deltas, _POW2, side="left")
+    cost = (n * np.arange(64) + 7) // 8 + 10 * n_exc
+    w = int(cost.argmin())
+    if cost[w] < (n * 64 + 7) // 8:
+        return w, int(n_exc[w])
+    return 64, 0
+
+
 def slpatch_encode(
     arr: np.ndarray,
 ) -> tuple[int, int, bytes, np.ndarray, np.ndarray]:
@@ -349,25 +383,9 @@ def slpatch_encode(
         )
     a = arr.astype(np.int64, copy=False)
     base = int(a.min()) if len(a) else 0
-    delta = (a.astype(_U64) - _U64(base & 0xFFFFFFFFFFFFFFFF)) & _U64(
-        0xFFFFFFFFFFFFFFFF
-    )
-    # per-value bit lengths via float log2 are unsafe near 2^53; compare
-    # against exact powers of two instead: bit_length(d) = #{k: 2^k <= d}
-    # over k = 0..63 (0 for d == 0, 64 for d >= 2^63)
-    bounds = (_U64(1) << np.arange(0, 64, dtype=_U64)).astype(_U64)
-    bl = np.searchsorted(bounds, delta, side="right").astype(np.int64)
-    hist = np.bincount(bl, minlength=65)
-    tail = np.cumsum(hist[::-1])[::-1]  # tail[w] = count(bl >= w)
-    n = len(a)
-    best_w, best_cost = 64, (n * 64 + 7) // 8
-    for w in range(64):
-        n_exc = int(tail[w + 1]) if w + 1 <= 64 else 0
-        cost = (n * w + 7) // 8 + 10 * n_exc
-        if cost < best_cost:
-            best_w, best_cost = w, cost
-    w = best_w
-    exc = bl > w
+    delta = _deltas(a, base)
+    w, _ = slpatch_width(np.sort(a))
+    exc = delta >= _POW2[w] if w < 64 else np.zeros(len(a), dtype=bool)
     exc_pos = np.flatnonzero(exc)
     payload = pack_bits(np.where(exc, _U64(0), delta), w)
     return base, w, payload, exc_pos.astype(np.uint16), a[exc_pos]

@@ -27,12 +27,13 @@ implements that literally:
 
 Scale shape: one ``.fls`` file per Spark partition on write
 (``mapInArrow`` — each task encodes its own partition, no shuffle), and on
-read the file list is parallelized and each task decodes whole files
-(footer → prune row groups → decode selected columns only). That is
-per-file parallel scan + projection + zone-map pruning — the same execution
-shape as the Parquet path, with the decode running in NumPy over Arrow
-batches. On a cluster the directory lives on a shared filesystem, exactly
-like every other file sink.
+read the file list is a local relation sliced into
+min(files, defaultParallelism) partitions, each task decoding whole files
+(footer → prune row groups → decode selected columns only) — no shuffle
+either. That is per-file parallel scan + projection + zone-map pruning —
+the same execution shape as the Parquet path, with the decode running in
+NumPy over Arrow batches. On a cluster the directory lives on a shared
+filesystem, exactly like every other file sink.
 
 Supported logical types: int8/16/32/64, float32/64, bool, string,
 timestamp_us, date32. Nulls carried as per-vector validity bitmaps (the
@@ -136,50 +137,63 @@ def _valid_mask(arr: pa.Array) -> np.ndarray | None:
 
 
 def _encode_int_vector(v: np.ndarray, out: bytearray) -> int:
-    """Choose + write the cheapest integer encoding by MEASURED bytes
-    (constant / RLE / frequency / SLPatch / FFOR); returns ENC_*."""
-    if len(v) and (v == v[0]).all():
+    """Choose + write the cheapest integer encoding by exact encoded bytes
+    (constant / RLE / frequency / SLPatch / FFOR); returns ENC_*. Every
+    candidate's size comes from one sort, one run count and one
+    bit-length search; only the winner is encoded."""
+    n = len(v)
+    s = np.sort(v)
+    if n and s[0] == s[-1]:
         out += struct.pack("<q", int(v[0]))
         return ENC_CONSTANT
-    base, width, payload = K.ffor_encode(v)
-    runs, idxs = K.rle_encode(v)
-    # RLE cost: run values (8B each) + packed run indices; FFOR cost: payload
-    iw = int(len(runs) - 1).bit_length()
-    rle_cost = 2 + 8 * len(runs) + 1 + (len(v) * iw + 7) // 8
-    ffor_cost = 9 + len(payload)
-    top, f_pos, f_vals = K.freq_encode(v)
-    freq_cost = 8 + 2 + 10 * len(f_pos)
-    sp_base, sp_w, sp_payload, sp_pos, sp_vals = K.slpatch_encode(v)
-    slp_cost = 9 + len(sp_payload) + 2 + 10 * len(sp_pos)
-    best = min(rle_cost if len(runs) <= 0xFFFF else 1 << 62,
+    width = (int(s[-1]) - int(s[0])).bit_length()
+    n_runs = 1 + int(np.count_nonzero(v[1:] != v[:-1]))
+    _, top_count = K.freq_top(s)
+    sp_w, sp_exc = K.slpatch_width(s)
+    # RLE: run values (8B each) + packed run indices; FFOR: packed deltas
+    # (bit-packed payloads are whole 64-bit words)
+    iw = (n_runs - 1).bit_length()
+    rle_cost = 2 + 8 * n_runs + 1 + (n * iw + 7) // 8
+    ffor_cost = 9 + (n * width + 63) // 64 * 8
+    freq_cost = 8 + 2 + 10 * (n - top_count)
+    slp_cost = 9 + (n * sp_w + 63) // 64 * 8 + 2 + 10 * sp_exc
+    best = min(rle_cost if n_runs <= 0xFFFF else 1 << 62,
                freq_cost, slp_cost, ffor_cost)
     if best == freq_cost and freq_cost < ffor_cost:
+        top, f_pos, f_vals = K.freq_encode(v)
         out += struct.pack("<qH", top, len(f_pos))
         out += f_pos.astype(np.uint16).tobytes()
         out += f_vals.astype(np.int64).tobytes()
         return ENC_FREQ
-    if len(runs) <= 0xFFFF and best == rle_cost and rle_cost < ffor_cost:
+    if n_runs <= 0xFFFF and best == rle_cost and rle_cost < ffor_cost:
+        runs, idxs = K.rle_encode(v)
         out += struct.pack("<H", len(runs))
         out += runs.astype(np.int64).tobytes()
         out += struct.pack("<B", iw)
         out += K.pack_bits(idxs, iw)
         return ENC_RLE
-    if best == slp_cost and slp_cost < ffor_cost and len(sp_pos):
+    if best == slp_cost and slp_cost < ffor_cost and sp_exc:
+        sp_base, sp_w, sp_payload, sp_pos, sp_vals = K.slpatch_encode(v)
         out += struct.pack("<qB", sp_base, sp_w)
         out += sp_payload
         out += struct.pack("<H", len(sp_pos))
         out += sp_pos.astype(np.uint16).tobytes()
         out += sp_vals.astype(np.int64).tobytes()
         return ENC_SLPATCH
+    base, width, payload = K.ffor_encode(v)
     out += struct.pack("<qB", base, width)
     out += payload
     return ENC_FFOR
 
 
 def _encode_float_vector(v: np.ndarray, ef: tuple[int, int], out: bytearray) -> int:
-    if len(v) and not np.isnan(v).any() and (v == v[0]).all():
-        out += struct.pack("<d", float(v[0]))
-        return ENC_CONSTANT
+    # constant only when every value has the same BIT pattern: 0.0 == -0.0
+    # would otherwise store a mixed-sign-zero vector as its first value
+    if len(v) and not np.isnan(v).any():
+        bits = v.view(np.int64)
+        if (bits == bits[0]).all():
+            out += struct.pack("<d", float(v[0]))
+            return ENC_CONSTANT
     ints, exc_pos, exc_vals = K.alp_encode(v, *ef)
     if len(exc_pos) <= len(v) // 4 and len(exc_pos) <= 0xFFFF:
         base, width, payload = K.ffor_encode(ints)
@@ -195,97 +209,119 @@ def _encode_float_vector(v: np.ndarray, ef: tuple[int, int], out: bytearray) -> 
     return ENC_UNCOMP
 
 
+def _str_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) of a null-free string array: value i is the UTF-8
+    bytes ``data[offsets[i]:offsets[i + 1]]``."""
+    large = pa.types.is_large_string(arr.type)
+    _, obuf, dbuf = arr.buffers()
+    offsets = np.frombuffer(
+        obuf, dtype=np.int64 if large else np.int32, count=len(arr) + 1,
+        offset=arr.offset * (8 if large else 4),
+    ).astype(np.int64)
+    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.zeros(0, np.uint8)
+    return offsets, data
+
+
 def _encode_str_chunk(
     col: pa.Array, out: bytearray, encodings: dict[str, int]
 ) -> None:
     """Strings for one row-group chunk: optional chunk dictionary + per-vector
-    packed indices (dictionary_kernel.hpp layout) or uncompressed offsets."""
-    py = col.to_pylist()
-    vals = [b"" if x is None else x.encode("utf-8") for x in py]
-    uniq = sorted(set(vals))
+    packed indices (dictionary_kernel.hpp layout) or uncompressed offsets.
+    Nulls encode as empty strings. The dictionary is the distinct values in
+    byte order (Arrow sorts strings bytewise) and its codes come from one
+    Arrow lookup; plain vectors are slices of the Arrow buffers."""
+    import pyarrow.compute as pc
+
+    filled = col.fill_null("")
+    offsets, data = _str_buffers(filled)
+    n_vals = len(filled)
+    uniq = pc.unique(filled)
+    uniq = uniq.take(pc.sort_indices(uniq))
     # a dictionary only pays when keys actually repeat — at ≥50% distinct
     # the key blob + codes exceed the plain layout, and FSST (below) is
     # the right tool for unique-but-compressible text
-    use_dict = len(uniq) <= max(4096, len(vals) // 4) and len(uniq) <= len(vals) // 2
+    use_dict = len(uniq) <= max(4096, n_vals // 4) and len(uniq) <= n_vals // 2
     use_fsst = False
-    fsst_table: list[bytes] = []
-    fsst_pat = None
     if not use_dict:
         # high-cardinality strings: try a chunk-shared FSST symbol table
         # (fsst_dict_kernel.hpp builds the table once in Prepare and
         # decodes per vector — same sharing geometry). The table is built
         # from a bounded sample and kept only when the measured sample
         # compression pays ≥15%, so incompressible chunks stay UNCOMP.
-        sample = b"".join(vals)[:65536]
+        sample = data[offsets[0] : min(offsets[-1], offsets[0] + 65536)].tobytes()
         if len(sample) >= 1024:
             fsst_table = K.fsst_build_table(sample)
-            fsst_pat = K._fsst_pattern(fsst_table)
-            if len(K.fsst_encode(sample, fsst_table, fsst_pat)) <= 0.85 * len(
-                sample
-            ):
+            fsst_enc = K.fsst_encoder(fsst_table)
+            if len(fsst_enc(sample)) <= 0.85 * len(sample):
                 use_fsst = True
     out += struct.pack(
         "<B", _STR_FSST if use_fsst else (_STR_DICT if use_dict else _STR_PLAIN)
     )
     if use_dict:
-        key_to_idx = {k: i for i, k in enumerate(uniq)}
-        ends, blob = K.dict_offsets_bytes(uniq)
+        koffsets, kdata = _str_buffers(uniq)
+        kblob = kdata[koffsets[0] : koffsets[-1]].tobytes()
+        kbounds = koffsets - koffsets[0]
         out += struct.pack("<I", len(uniq))
-        out += ends.astype(np.uint32).tobytes()
-        out += struct.pack("<Q", len(blob))
-        out += blob
-        codes = np.fromiter((key_to_idx[v] for v in vals), dtype=np.uint64, count=len(vals))
+        out += kbounds[1:].astype(np.uint32).tobytes()
+        out += struct.pack("<Q", len(kblob))
+        out += kblob
+        codes = np.asarray(pc.index_in(filled, value_set=uniq)).astype(np.uint64)
+        w = int(len(uniq) - 1).bit_length()
     elif use_fsst:
         ends, blob = K.dict_offsets_bytes(fsst_table)
         out += struct.pack("<H", len(fsst_table))
         out += ends.astype(np.uint32).tobytes()
         out += struct.pack("<Q", len(blob))
         out += blob
-    for start in range(0, len(vals), VEC_SZ):
-        vec = vals[start : start + VEC_SZ]
-        n = len(vec)
-        arr_slice = col.slice(start, n)
-        mask = _valid_mask(arr_slice)
+        vals = filled.cast(
+            pa.large_binary() if pa.types.is_large_string(filled.type) else pa.binary()
+        ).to_pylist()
+    valid_all = _valid_mask(col)
+    for start in range(0, n_vals, VEC_SZ):
+        n = min(VEC_SZ, n_vals - start)
+        mask = None
+        if valid_all is not None:
+            m = valid_all[start : start + n]
+            if not m.all():
+                mask = m
         body = bytearray()
         if use_dict:
             cvec = codes[start : start + n]
             if n and (cvec == cvec[0]).all():
                 enc = ENC_CONSTANT
-                k = uniq[int(cvec[0])]
+                i = int(cvec[0])
+                k = kblob[kbounds[i] : kbounds[i + 1]]
                 body += struct.pack("<I", len(k))
                 body += k
             else:
                 enc = ENC_DICT
-                w = int(len(uniq) - 1).bit_length()
                 body += struct.pack("<B", w)
                 body += K.pack_bits(cvec, w)
-        elif use_fsst:
-            # per-string encode, concatenated; decoded end-offsets ride
-            # along so one bulk decode per vector splits back into strings.
-            # The chunk-level table was chosen from a 64 KiB head sample;
-            # a vector past the sampled region can expand (unmatched bytes
-            # become 2-byte escape pairs), so compare the measured FSST
-            # body against the plain layout per vector and fall back to
-            # ENC_UNCOMP when FSST loses (the reader already accepts mixed
-            # vectors under _STR_FSST — table stays in the chunk header).
-            ends, blob = K.dict_offsets_bytes(vec)
-            code = b"".join(K.fsst_encode(s, fsst_table, fsst_pat) for s in vec)
-            if len(code) < len(blob):
+        else:
+            o = offsets[start : start + n + 1]
+            ends = (o[1:] - o[0]).astype(np.uint32).tobytes()
+            blob_len = int(o[-1] - o[0])
+            # FSST: per-string encode, concatenated; decoded end-offsets
+            # ride along so one bulk decode per vector splits back into
+            # strings. The chunk-level table was chosen from a 64 KiB head
+            # sample; a vector past the sampled region can expand
+            # (unmatched bytes become 2-byte escape pairs), so compare the
+            # measured FSST body against the plain layout per vector and
+            # fall back to ENC_UNCOMP when FSST loses (the reader already
+            # accepts mixed vectors under _STR_FSST — table stays in the
+            # chunk header).
+            code = (
+                b"".join(map(fsst_enc, vals[start : start + n])) if use_fsst else None
+            )
+            body += ends
+            if code is not None and len(code) < blob_len:
                 enc = ENC_FSST
-                body += ends.astype(np.uint32).tobytes()
                 body += struct.pack("<Q", len(code))
                 body += code
             else:
                 enc = ENC_UNCOMP
-                body += ends.astype(np.uint32).tobytes()
-                body += struct.pack("<Q", len(blob))
-                body += blob
-        else:
-            enc = ENC_UNCOMP
-            ends, blob = K.dict_offsets_bytes(vec)
-            body += ends.astype(np.uint32).tobytes()
-            body += struct.pack("<Q", len(blob))
-            body += blob
+                body += struct.pack("<Q", blob_len)
+                body += data[o[0] : o[-1]].tobytes()
         _write_vec_header(out, enc, n, mask)
         out += body
         encodings[ENC_NAMES[enc]] = encodings.get(ENC_NAMES[enc], 0) + 1
@@ -323,7 +359,7 @@ def _encode_chunk(
         np_all = np.asarray(c.cast(pa.int64()).fill_null(0))
     else:
         np_all = np.asarray(col.cast(pa.float64()).fill_null(np.nan))
-    valid_all = np.asarray(col.is_valid()) if null_count else None
+    valid_all = _valid_mask(col)
     vv = np_all if valid_all is None else np_all[valid_all]
     if len(vv):
         if int_backed:
@@ -1005,15 +1041,14 @@ def read_fls_native(
                             arrays.append(pa.nulls(n_rows, t))
                     yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
-    # r11 (guide §4): typed VALUES LocalRelation for the file list —
-    # createDataFrame(list) is a Python-RDD-backed relation whose every
-    # execution (plus the repartition) spins Python worker tasks just to
-    # emit the paths the decode tasks read
+    # typed VALUES LocalRelation for the file list: createDataFrame(list)
+    # is a Python-RDD-backed relation whose every execution spins Python
+    # worker tasks just to emit the paths. Its LocalTableScan already
+    # slices the list into min(files, defaultParallelism) partitions, so
+    # the decode tasks read it in place — no shuffle
     from duckdb_fastlanes_spark.catalog import values_df
 
-    files_df = values_df(spark, [(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
+    files_df = values_df(spark, [(f,) for f in files], "path string")
     return files_df.mapInArrow(decode, ddl)
 
 

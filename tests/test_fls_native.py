@@ -7,6 +7,8 @@ mismatches) plus property tests on each codec kernel.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -101,6 +103,28 @@ def test_dict_offsets_layout():
     keys = [b"", b"a", b"hello", b"\xf0\x9f\x8c\x8d"]
     ends, blob = K.dict_offsets_bytes(keys)
     assert K.strings_from_offsets(ends, blob) == keys
+
+
+@pytest.mark.parametrize("n", [0, 1, 7, 63, 64, 65, 1000, 1024])
+def test_pack_bits_layout_matches_reference(n):
+    """Dense little-endian W-bit fields, zero-padded to whole 64-bit words:
+    value i occupies bits [i*W, (i+1)*W) of one little-endian integer. The
+    roundtrip test alone cannot catch a layout change that stays
+    self-consistent between pack and unpack."""
+    rng = np.random.default_rng(n)
+    for width in range(65):
+        hi = 2**width
+        v = np.array(
+            [int(x) % hi for x in rng.integers(0, 2**63, n, dtype=np.uint64)],
+            dtype=np.uint64,
+        ) if width else np.zeros(n, dtype=np.uint64)
+        if width == 64:
+            v |= rng.integers(0, 2, n, dtype=np.uint64) << np.uint64(63)
+        acc = 0
+        for i, x in enumerate(v.tolist()):
+            acc |= x << (i * width)
+        ref = acc.to_bytes(((n * width + 63) // 64) * 8, "little")
+        assert K.pack_bits(v, width) == ref, width
 
 
 # ----------------------------------------------------------------- container
@@ -330,6 +354,103 @@ def test_projection_decodes_only_requested(tmp_path):
     assert got.column("i64").to_pylist() == t.column("i64").to_pylist()
 
 
+def _golden_table(n=4096, seed=2024):
+    """Seeded table whose 2048-row groups hit every encoding: constant,
+    FFOR, RLE, frequency, SLPatch, dict, ALP, FSST and uncompressed, with
+    nulls, an all-null vector and non-ASCII strings. No float vector mixes
+    0.0 and -0.0 (those encode differently since the constant check
+    compares bit patterns)."""
+    rng = np.random.default_rng(seed)
+    idx = np.arange(n)
+    freq = np.full(n, 5, dtype=np.int64)
+    hit = rng.random(n) < 0.02
+    freq[hit] = rng.integers(-(2**40), 2**40, int(hit.sum()))
+    slp = rng.integers(0, 16, n).astype(np.int64)
+    out = rng.random(n) < 0.01
+    slp[out] = rng.integers(2**40, 2**41, int(out.sum()))
+    alp = np.round(rng.uniform(-1000, 1000, n), 2)
+    alp[[3, 700, 2050]] = [np.inf, np.nan, 1.0 / 3.0]
+    words = ["grüße", "naïve", "café", "日本語", "données", "straße", "ταχύ",
+             "the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog"]
+    keys = ["alpha", "βeta", "γάμμα", "😀 emoji", "Zeta", "zeta", "", "Ωmega"]
+    alnum = np.array(list("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"))
+    return pa.table({
+        "const_i": pa.array(np.full(n, 7), pa.int32()),
+        "ffor_i": pa.array(rng.integers(0, 1000, n), pa.int64()),
+        "rle_i": pa.array((idx // 128) * 1_000_003, pa.int64()),
+        "freq_i": pa.array(freq, pa.int64()),
+        "slp_i": pa.array(slp, pa.int64()),
+        "i8": pa.array([None if i % 7 == 0 else int(i % 100) - 50 for i in idx], pa.int8()),
+        "b": pa.array(rng.random(n) < 0.3, pa.bool_()),
+        "d": pa.array((19000 + idx // 3).astype(np.int32), pa.date32()),
+        "ts": pa.array(1_700_000_000_000_000 + idx * 1_000_003, pa.timestamp("us")),
+        "const_f": pa.array(np.full(n, 1.5), pa.float64()),
+        "alp_f": pa.array([None if i % 13 == 0 else float(x) for i, x in enumerate(alp)], pa.float64()),
+        "unc_f": pa.array(rng.standard_normal(n), pa.float64()),
+        "f32": pa.array(np.round(rng.uniform(0, 50, n), 1).astype(np.float32), pa.float32()),
+        "null_f": pa.array([None if i < 1024 else float(i % 10) for i in idx], pa.float64()),
+        "dict_s": pa.array([
+            "const" if i < 1024 else (None if i % 9 == 0 else keys[int(rng.integers(len(keys)))])
+            for i in idx], pa.string()),
+        "fsst_s": pa.array([
+            None if i % 17 == 0
+            else " ".join(words[int(j)] for j in rng.integers(0, len(words), 6)) + f" #{i}"
+            for i in idx], pa.string()),
+        "plain_s": pa.array(
+            ["".join(rng.choice(alnum, int(rng.integers(8, 13)))) for _ in idx], pa.string()
+        ),
+    })
+
+
+#: sha256 of ``write_table(_golden_table(), row_group_size=2048)``, taken
+#: from the per-value reference encoder this vectorized one replaced
+GOLDEN_SHA256 = "ab2e771ad961f7b06b3a3be9f71e08a0aa21a733dbe573816a38a534288ab1af"
+
+
+def test_golden_file_bytes(tmp_path):
+    import hashlib
+
+    t = _golden_table()
+    path = str(tmp_path / "golden.fls")
+    footer = write_table(t, path, row_group_size=2048)
+    encs = set()
+    for rg in footer["row_groups"]:
+        for meta in rg["columns"]:
+            encs |= set(meta["encodings"])
+    assert encs == {
+        "constant", "ffor", "rle", "frequency", "slpatch",
+        "dict", "alp", "fsst", "uncompressed",
+    }
+    with open(path, "rb") as f:
+        assert hashlib.sha256(f.read()).hexdigest() == GOLDEN_SHA256
+    back = pa.Table.from_batches(list(read_file(path)))
+    for name in t.schema.names:
+        a, b = t.column(name).combine_chunks(), back.column(name).combine_chunks()
+        if pa.types.is_floating(a.type):
+            assert np.array_equal(
+                a.to_numpy(zero_copy_only=False), b.to_numpy(zero_copy_only=False),
+                equal_nan=True,
+            ), name
+            assert a.is_null().equals(b.is_null()), name
+        else:
+            assert a.equals(b), name
+
+
+def test_float_vector_mixing_signed_zeros_keeps_sign(tmp_path):
+    """0.0 == -0.0, so a value-equality constant check would store a vector
+    mixing them as CONSTANT and lose every sign bit but the first."""
+    v = np.zeros(3 * 1024, dtype=np.float64)
+    v[1:1024] = -0.0
+    v[1024:2048:2] = -0.0
+    v[2048:] = -0.0
+    path = str(tmp_path / "z.fls")
+    footer = write_table(pa.table({"z": pa.array(v)}), path, row_group_size=1024)
+    got = pa.Table.from_batches(list(read_file(path))).column("z").to_numpy()
+    assert np.array_equal(np.signbit(got), np.signbit(v))
+    # an all -0.0 vector is still constant
+    assert footer["row_groups"][2]["columns"][0]["encodings"] == {"constant": 1}
+
+
 def test_empty_table(tmp_path):
     t = _all_types_table(0)
     path = str(tmp_path / "empty.fls")
@@ -347,6 +468,23 @@ def test_spark_roundtrip_documents(spark, tmp_path, parts):
     rt = read_fls_native(spark, out)
     assert rt.exceptAll(d).count() == 0
     assert d.exceptAll(rt).count() == 0
+
+
+def test_spark_scan_has_no_shuffle(spark, tmp_path):
+    """The file list is a local relation already sliced into
+    min(files, defaultParallelism) partitions; the scan adds no Exchange."""
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 40 * par, 1, 1).selectExpr("id", "id % 7 AS v")
+    for parts in (3, par + 2):
+        out = str(tmp_path / f"n{parts}")
+        write_fls_native(df.repartition(parts), out)
+        n_files = len([f for f in os.listdir(out) if f.endswith(".fls")])
+        rt = read_fls_native(spark, out)
+        assert rt.rdd.getNumPartitions() == min(n_files, par)
+        rt.collect()
+        plan = rt._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert rt.count() == df.count()
 
 
 def test_spark_partition_invariance(spark, tmp_path):
