@@ -44,6 +44,7 @@ a superset). LIST/STRUCT/MAP are not supported, matching the reference
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import struct
@@ -659,9 +660,31 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
 Predicate = tuple[str, str, object]
 
 
+_EPOCH_DATE = dt.date(1970, 1, 1)
+_EPOCH_UTC = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+_ONE_US = dt.timedelta(microseconds=1)
+
+
+def _stat_unit(val, ltype: str):
+    """A predicate value in the unit the footer stats store: days since the
+    epoch for date32, µs since the epoch for timestamp_us. Naive datetimes
+    are read as UTC (the session's pinned time zone); aware ones convert to
+    UTC. Any other value is returned as is."""
+    if ltype == "timestamp_us" and isinstance(val, dt.date):
+        if not isinstance(val, dt.datetime):
+            val = dt.datetime.combine(val, dt.time())
+        if val.tzinfo is None:
+            val = val.replace(tzinfo=dt.timezone.utc)
+        return (val - _EPOCH_UTC) // _ONE_US
+    if ltype == "date32" and type(val) is dt.date:
+        return (val - _EPOCH_DATE).days
+    return val
+
+
 def _rg_survives(rg: dict, schema: list[dict], preds: Sequence[Predicate]) -> bool:
     """Conservative zone-map check: prune only when stats PROVE emptiness
-    (row_group_filter.cpp:75-199 semantics — missing stats never prune)."""
+    (row_group_filter.cpp:75-199 semantics — missing stats never prune, and
+    neither do stats the predicate value cannot be ordered against)."""
     by_name = {c["name"]: i for i, c in enumerate(schema)}
     for col, op, val in preds:
         i = by_name.get(col)
@@ -671,16 +694,20 @@ def _rg_survives(rg: dict, schema: list[dict], preds: Sequence[Predicate]) -> bo
         lo, hi = meta.get("min"), meta.get("max")
         if lo is None or hi is None:
             continue
-        if op in ("=", "==") and (val < lo or val > hi):
-            return False
-        if op in (">",) and hi <= val:
-            return False
-        if op in (">=",) and hi < val:
-            return False
-        if op in ("<",) and lo >= val:
-            return False
-        if op in ("<=",) and lo > val:
-            return False
+        v = _stat_unit(val, schema[i]["type"])
+        try:
+            if op in ("=", "==") and (v < lo or v > hi):
+                return False
+            if op in (">",) and hi <= v:
+                return False
+            if op in (">=",) and hi < v:
+                return False
+            if op in ("<",) and lo >= v:
+                return False
+            if op in ("<=",) and lo > v:
+                return False
+        except TypeError:
+            continue
     return True
 
 

@@ -345,6 +345,66 @@ def test_rowgroup_pruning_skips(tmp_path):
     assert k.min() == 5120 and k.max() == 8191
 
 
+def _two_day_groups(tmp_path):
+    """Two row groups: day 2020-01-01 (00:00 timestamps), day 2020-01-03
+    (12:00 timestamps). Footer stats store days / µs since the epoch."""
+    import datetime as dt
+
+    d = [dt.date(2020, 1, 1)] * 1024 + [dt.date(2020, 1, 3)] * 1024
+    ts = [dt.datetime(2020, 1, 1)] * 1024 + [dt.datetime(2020, 1, 3, 12)] * 1024
+    t = pa.table({"d": pa.array(d), "ts": pa.array(ts, pa.timestamp("us"))})
+    path = str(tmp_path / "dates.fls")
+    write_table(t, path, row_group_size=1024)
+    return path
+
+
+@pytest.mark.parametrize("adaptive", [False, True])
+@pytest.mark.parametrize(
+    "pred, kept_day",
+    [
+        (("d", ">=", "2020-01-02"), 3),
+        (("d", "<", "2020-01-02"), 1),
+        (("ts", "<", "2020-01-02 00:00"), 1),
+        (("ts", ">", "2020-01-02 00:00"), 3),
+    ],
+)
+def test_rowgroup_pruning_on_date_and_timestamp(tmp_path, adaptive, pred, kept_day):
+    import datetime as dt
+
+    from duckdb_fastlanes_spark.io.fls_native import read_file_adaptive
+
+    col, op, text = pred
+    val = (
+        dt.date.fromisoformat(text) if col == "d" else dt.datetime.fromisoformat(text)
+    )
+    reader = read_file_adaptive if adaptive else read_file
+    batches = list(reader(_two_day_groups(tmp_path), predicate=[(col, op, val)]))
+    assert len(batches) == 1 and batches[0].num_rows == 1024
+    assert set(batches[0].column("d").to_pylist()) == {dt.date(2020, 1, kept_day)}
+
+
+def test_rowgroup_pruning_timestamp_units(tmp_path):
+    """Aware datetimes convert to UTC, naive ones are read as UTC, a date
+    bound on a timestamp column is its midnight, and a value the stats
+    cannot be ordered against keeps every row group."""
+    import datetime as dt
+
+    path = _two_day_groups(tmp_path)
+    plus14 = dt.timezone(dt.timedelta(hours=14))
+
+    def groups(pred):
+        return len(list(read_file(path, predicate=[pred])))
+
+    # 2020-01-03 13:00+14:00 is 2020-01-02 23:00 UTC: only day 3 is later
+    assert groups(("ts", ">", dt.datetime(2020, 1, 3, 13, tzinfo=plus14))) == 1
+    # the same wall time read as UTC is after day 3's 12:00
+    assert groups(("ts", ">", dt.datetime(2020, 1, 3, 13))) == 0
+    assert groups(("ts", ">=", dt.date(2020, 1, 2))) == 1
+    assert groups(("ts", "=", dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc))) == 1
+    assert groups(("d", ">=", "not a date")) == 2
+    assert groups(("d", "<", dt.datetime(2020, 1, 2))) == 2
+
+
 def test_projection_decodes_only_requested(tmp_path):
     t = _all_types_table(1000)
     path = str(tmp_path / "proj.fls")
